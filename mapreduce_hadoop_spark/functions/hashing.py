@@ -137,8 +137,12 @@ def bloom_might_contain(
     bloom: Column, key: "Column | str", n_bits: int, k: int = BLOOM_K
 ) -> Column:
     """True iff ``key`` may be in the set ``bloom`` encodes (no false
-    negatives); NULL keys read false (a NULL key is in no key set, the
-    same row-keeping behavior a NULL anti-join key has)."""
+    negatives). xxhash64 is non-nullable (it skips a NULL child and
+    returns the seed's hash), so a NULL key probes real bit positions
+    like any value and can read bloom-positive; an anti-join caller keeps
+    a NULL-keyed row by either route (bypass, or a join whose NULL
+    equality never matches). The coalesce only maps a NULL bitmap to
+    false."""
     key = F.col(key) if isinstance(key, str) else key
     hit = F.lit(True)
     for i in range(k):

@@ -126,8 +126,9 @@ def clean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # move rows from the bypass into the join — the kept set is
     # identical by construction (this branch was hash-verified at three
     # scales as the unconditional form before the cost split landed).
-    # NULL keys read bloom-false and take the bypass, exactly the
-    # row-keeping behavior a NULL anti-join key has.
+    # NULL keys hash like any value (xxhash64 is non-nullable) and may
+    # read bloom-positive; either route keeps the row, because the
+    # residual anti-join's NULL equality never matches.
     # The bitmap is DRIVER-BUILT (one bounded aggregation job, collect
     # <= n_bits/8 bytes) and rides as a one-row LocalTableScan
     # broadcast; see hashing.bloom_build for the measured in-plan

@@ -47,6 +47,11 @@ DEFAULT_CONF = {
     # get in the oracle.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.ui.enabled": "false",
+    # On by default in Spark 4.1: every PySpark Column call records its
+    # Python call site for error query contexts, about 10 of its ~11 py4j
+    # round trips. Off, error messages lose only that call site.
+    # PySpark reads the flag once per process, at the first Column call.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

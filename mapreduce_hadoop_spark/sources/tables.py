@@ -6,7 +6,12 @@ Parquet scans give the engine predicate pushdown + column pruning for free —
 
 from __future__ import annotations
 
+import os
+import re
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -42,9 +47,77 @@ def ensure_confs(spark: SparkSession) -> None:
         pass
 
 
+# Confs that change the schema Spark infers from a parquet footer; their
+# current values join the schema memo key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+
+
+def _local_path(path: str) -> "str | None":
+    """``path`` as a local filesystem path (``file:`` scheme stripped), or
+    ``None`` for a remote scheme such as ``s3a://``/``hdfs://``."""
+    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):(?://)?(.*)$", path)
+    if not m:
+        return path
+    if m.group(1).lower() != "file":
+        return None
+    return m.group(2) or "/"
+
+
+def _schema_key(spark: SparkSession, path: str) -> "tuple | None":
+    """Memo key for a single local parquet file: absolute path, size,
+    mtime and the inference confs. ``None`` (no memo) for remote paths,
+    directories and anything that cannot be stat'ed."""
+    local = _local_path(path)
+    if local is None:
+        return None
+    try:
+        st = os.stat(local)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    confs = tuple(str(spark.conf.get(k)) for k in _SCHEMA_CONFS)
+    return (os.path.abspath(local), st.st_size, st.st_mtime_ns, confs)
+
+
+def _memo_schema(spark: SparkSession, path: str) -> "StructType | None":
+    """Spark's inferred schema of a local parquet file, kept in memory, or
+    ``None`` where no memo applies (remote or directory path).
+
+    Inference (one Spark job) runs the first time a file is seen under a
+    given set of inference confs; later calls start no job. A rewritten
+    file changes its size or mtime and so its key. Spark's own inference
+    is used rather than a pyarrow footer mapping because it is exact by
+    construction: an Arrow schema cannot tell INT64 ``TIMESTAMP(NANOS)``
+    (bigint under nanosAsLong) from INT96 (timestamp)."""
+    key = _schema_key(spark, path)
+    if key is None:
+        return None
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        schema = _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
+    return schema
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, memoized per local file."""
+    schema = _memo_schema(spark, path)
+    return spark.read.parquet(path).schema if schema is None else schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    # A local file reads with its memoized schema, so no inference job
+    # runs; remote and directory paths keep the plain read.
+    schema = _memo_schema(spark, path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     df = _denaive_timestamps(df)
     if name == "events":
         df = normalize_events(df)
@@ -141,14 +214,10 @@ def parquet_scan_width(spark: SparkSession, path: str) -> "int | None":
     """
     import glob as _glob
     import math
-    import os
-    import re
 
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):(?://)?(.*)$", path)
-    if m:
-        if m.group(1).lower() != "file":
-            return None  # remote scheme: not listable from the driver's OS
-        path = m.group(2) or "/"
+    path = _local_path(path)
+    if path is None:
+        return None  # remote scheme: not listable from the driver's OS
     if os.path.isdir(path):
         files = sorted(
             f

@@ -89,13 +89,17 @@ FROM (
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreduce_hadoop_spark.sources.tables import ensure_confs, normalize_events
+    from mapreduce_hadoop_spark.sources.tables import (
+        ensure_confs,
+        normalize_events,
+        parquet_schema,
+    )
 
     ensure_confs(spark)
     path = f"{sf_dir}/events.parquet"
     # Raw on-disk schema (ts as nanos-long under the nanosAsLong conf, which
     # load_table sets); the stream converts to TimestampType in-flight.
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = parquet_schema(spark, path)
     # The file stream source requires a directory; select the table file(s)
     # with a glob filter ("events*" also admits redelivered copies in tests).
     return normalize_events(

@@ -138,10 +138,14 @@ def positions_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """The gps.positions derivation over a file stream of the events table."""
-    from mapreduce_hadoop_spark.sources.tables import ensure_confs, normalize_events
+    from mapreduce_hadoop_spark.sources.tables import (
+        ensure_confs,
+        normalize_events,
+        parquet_schema,
+    )
 
     ensure_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # "events*" (like sessions._events_stream): a continuation file
     # (events2.parquet, e.g. the next ingest drop) joins the stream.
     reader = spark.readStream.schema(raw_schema).option(

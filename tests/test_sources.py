@@ -1,8 +1,11 @@
-"""Native text format sources/sinks round-trip tests."""
+"""Source readers: native text formats round-trip; the parquet schema memo."""
 
 from __future__ import annotations
 
 import glob
+import os
+
+import pytest
 
 from mapreduce_hadoop_spark.operators.segments import clean_positions
 from mapreduce_hadoop_spark.sources.segments_csv import read_segments
@@ -100,3 +103,93 @@ def test_read_trips_gzip_transparent(spark, tmp_path):
     assert rows[0]["taxi"] == 450
     assert rows[0]["revenue"] == 4.06
     assert rows[0]["is_airport"] is True
+
+
+# --- parquet schema memo (sources.tables.parquet_schema / load_table) ---
+
+
+def _sf_dirs():
+    from conftest import SF_DIR
+
+    root = os.path.dirname(SF_DIR)
+    return [os.path.join(root, sf) for sf in ("sf0.001", "sf0.01", "sf0.1")]
+
+
+@pytest.mark.parametrize("sf_path", _sf_dirs(), ids=os.path.basename)
+def test_parquet_schema_matches_spark_inference(spark, sf_path):
+    from mapreduce_hadoop_spark.sources.tables import TABLE_NAMES, ensure_confs, parquet_schema
+
+    if not os.path.isdir(sf_path):
+        pytest.skip(f"{sf_path} not present")
+    ensure_confs(spark)
+    for name in TABLE_NAMES:
+        p = f"{sf_path}/{name}.parquet"
+        assert parquet_schema(spark, p).json() == spark.read.parquet(p).schema.json(), name
+
+
+def _write_events_fixture(path, extra_column=False):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {
+        "event_id": pa.array([1, 2], pa.int64()),
+        # INT64 TIMESTAMP(NANOS): bigint under nanosAsLong.
+        "ts": pa.array([1_211_706_961_123_456_789, 1_211_706_962_000_000_999], pa.timestamp("ns")),
+        # Naive timestamp[us]: session-tz TIMESTAMP, not TIMESTAMP_NTZ.
+        "seen": pa.array([1_211_706_961_000_000, None], pa.timestamp("us")),
+    }
+    if extra_column:
+        cols["note"] = pa.array(["a", "b"])
+    pq.write_table(pa.table(cols), path, version="2.6")
+
+
+def test_parquet_schema_nanos_and_naive_fixture(spark, tmp_path):
+    from pyspark.sql.types import LongType, TimestampType
+
+    from mapreduce_hadoop_spark.sources.tables import ensure_confs, load_table, parquet_schema
+
+    p = str(tmp_path / "events.parquet")
+    _write_events_fixture(p)
+    ensure_confs(spark)
+    schema = parquet_schema(spark, p)
+    assert schema.json() == spark.read.parquet(p).schema.json()
+    assert isinstance(schema["ts"].dataType, LongType)
+    assert isinstance(schema["seen"].dataType, TimestampType)
+    df = load_table(spark, str(tmp_path), "events")
+    assert isinstance(df.schema["ts"].dataType, TimestampType)
+    # Truncated to microseconds, as DuckDB reads it.
+    got = [r["us"] for r in df.selectExpr("unix_micros(ts) AS us").orderBy("us").collect()]
+    assert got == [1_211_706_961_123_456, 1_211_706_962_000_000]
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_load_table_repeat_starts_no_job(spark, tmp_path):
+    from mapreduce_hadoop_spark.sources.tables import load_table
+
+    _write_events_fixture(str(tmp_path / "events.parquet"))
+    load = lambda: load_table(spark, str(tmp_path), "events")  # noqa: E731
+    # The first load infers the schema (a job); the second reuses it.
+    assert _jobs_in_group(spark, f"schema-first-{tmp_path.name}", load)
+    assert _jobs_in_group(spark, f"schema-repeat-{tmp_path.name}", load) == []
+
+
+def test_parquet_schema_follows_rewritten_file(spark, tmp_path):
+    from mapreduce_hadoop_spark.sources.tables import ensure_confs, load_table, parquet_schema
+
+    p = str(tmp_path / "events.parquet")
+    _write_events_fixture(p)
+    ensure_confs(spark)
+    assert "note" not in parquet_schema(spark, p).names
+    _write_events_fixture(p, extra_column=True)
+    assert "note" in parquet_schema(spark, p).names
+    assert load_table(spark, str(tmp_path), "events").columns == ["event_id", "ts", "seen", "note"]

@@ -17,6 +17,7 @@ a partial-agg groupBy. No driver-side loops anywhere.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -44,14 +45,35 @@ QUALITY_MIN = 0.5
 # Both branches are value-identical by construction (the bypass was
 # hash-verified at 3 scales while it was the unconditional form), the
 # split is a pure function of the data, and the threshold is a deploy
-# dial. 4M ids ~ 64 MB of hash relation = the session's
-# autoBroadcastJoinThreshold.
+# dial, capped by the session's autoBroadcastJoinThreshold (bloom_min_nds):
+# 4M ids ~ 64 MB of hash relation = the default threshold.
 CORPUS_BLOOM_MIN_NDS = int(
     os.environ.get("SPARK_GRAFT_BLOOM_MIN_NDS", str(4_000_000))
 )
+# Broadcast hash relation bytes per near-dup id (4M ids ~ 64 MB).
+BROADCAST_BYTES_PER_ID = 16
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
 # Bloom bitmap width FLOOR (bits); when the bypass branch fires the width
 # is sized from the actual count (10 bits/key, FP < 1%), never below this.
 CORPUS_BLOOM_BITS = int(os.environ.get("SPARK_GRAFT_BLOOM_BITS", str(1 << 20)))
+
+
+def byte_size(value: str) -> int:
+    """Bytes of a Spark byte-size conf value ("67108864", "10MB", "-1")."""
+    m = re.fullmatch(r"\s*(-?\d+)\s*([kmgtp]?)b?\s*", value.lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
+
+
+def bloom_min_nds(spark: SparkSession) -> int:
+    """Near-dup count from which clean_docs takes the Bloom bypass:
+    CORPUS_BLOOM_MIN_NDS, lowered to what the session's
+    autoBroadcastJoinThreshold can broadcast as a hash relation (0 when
+    broadcasting is off), so no count plans the plain anti-join as a
+    corpus-exchanging sort-merge join."""
+    limit = byte_size(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    return min(CORPUS_BLOOM_MIN_NDS, max(limit, 0) // BROADCAST_BYTES_PER_ID)
 
 
 def clean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,7 +130,7 @@ def clean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r18 order 2). The old plan fed the FULL corpus into the anti-join's
     # doc_id exchange — a corpus-wide shuffle write paid before AQE
     # converted the join to broadcast at runtime.
-    if n_nd < CORPUS_BLOOM_MIN_NDS:
+    if n_nd < bloom_min_nds(spark):
         # The id set fits a broadcast hash relation, and because the
         # cached relation's size is KNOWN, the plain anti-join plans as
         # BroadcastHashJoin LeftAnti statically — the corpus side

@@ -52,7 +52,15 @@ DEFAULT_CONF = {
     # round trips. Off, error messages lose only that call site.
     # PySpark reads the flag once per process, at the first Column call.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # PySpark's daemon without its per-task importlib.invalidate_caches(),
+    # which re-reads pyspark.zip on Python 3.11/3.12 (see pyworker.py).
+    # Opt out with extra_conf={"spark.python.daemon.module": "pyspark.daemon"}.
+    "spark.python.daemon.module": "mapreduce_hadoop_spark.pyworker",
 }
+
+# The directory holding this package: Python workers import the daemon
+# module and engine functions from it whatever their working directory.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -78,6 +86,9 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [PACKAGE_ROOT] + [p for p in conf.get(key, "").split(os.pathsep) if p]
+    conf[key] = os.pathsep.join(dict.fromkeys(paths))
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

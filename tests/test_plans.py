@@ -651,3 +651,53 @@ def test_clean_docs_bloom_branch_shape_and_equivalence(spark, sf_dir, monkeypatc
     got = {tuple(r) for r in df.collect()}
     dedup.unpersist_intermediates()
     assert got == expected
+
+
+def test_bloom_min_nds_follows_broadcast_threshold(spark):
+    """The Bloom threshold never exceeds what the session can broadcast:
+    4M ids at the default 64 MB, fewer under a smaller threshold, 0 with
+    broadcasting off."""
+    from mapreduce_hadoop_spark.operators import corpus
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        assert corpus.bloom_min_nds(spark) == corpus.CORPUS_BLOOM_MIN_NDS == 4_000_000
+        for value, want in (("1MB", 65_536), ("16k", 1_024), ("-1", 0)):
+            spark.conf.set(key, value)
+            assert corpus.bloom_min_nds(spark) == want, value
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_clean_docs_broadcast_off_takes_bloom_branch(spark, sf_dir):
+    """A broadcast threshold below the Bloom dial: the near-dup ids cannot
+    broadcast, so clean_docs must plan the Bloom bypass (doc_id exchanges
+    carry only bloom-positive rows) rather than a corpus-wide sort-merge
+    anti-join, with the default run's output."""
+    import re
+
+    from mapreduce_hadoop_spark.operators import corpus, dedup
+    from mapreduce_hadoop_spark.plans.checks import formatted_plan
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    dedup.unpersist_intermediates()
+    expected = {tuple(r) for r in corpus.corpus_clean_stats(spark, sf_dir).collect()}
+    dedup.unpersist_intermediates()
+    spark.conf.set(key, "-1")
+    try:
+        df = corpus.corpus_clean_stats(spark, sf_dir)
+        plan = formatted_plan(df)
+        assert "Union" in plan, plan[:1500]
+        exchanges = re.findall(
+            r"\(\d+\) Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]\s*\nArguments: hashpartitioning\(doc_id",
+            plan,
+        )
+        assert exchanges, plan[:1500]
+        assert all("bloom_hit" in cols for cols in exchanges), exchanges
+        got = {tuple(r) for r in df.collect()}
+    finally:
+        dedup.unpersist_intermediates()
+        spark.conf.set(key, saved)
+    assert got == expected
